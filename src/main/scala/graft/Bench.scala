@@ -71,6 +71,28 @@ object Bench {
     case c             => c.toString
   }
 
+  /** `v` with `digits` decimals in `Locale.ROOT`: the JSON records must
+    * use a decimal point whatever the JVM's default locale is (under a
+    * comma-decimal locale `f"%.3f"` writes `1,234`, which is not JSON).
+    */
+  private[graft] def fixed(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** The stdout contract line: the run's total and calibrations, the
+    * `top` per-query medians (most expensive first) and how many
+    * successful queries were `omitted` from them.
+    */
+  private[graft] def contractLine(total: Double, calib: Double,
+      calibIo: Double, calibs: Seq[Double], sweeps: Int, source: String,
+      nFailed: Int, io: Seq[String], top: Seq[(String, Double)],
+      omitted: Int, sfDir: String): String = {
+    val calibsJson = calibs.map(fixed(_, 6)).mkString("[", ",", "]")
+    val ioJson = io.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val qsTop = top.map { case (k, v) => "\"" + k + "\":" + fixed(v, 3) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"value_calib":${total / calib},"unit":"sec","stat":"median_of_sweeps","sweeps":$sweeps,"calib":$calib,"calib_io":$calibIo,"calibs":$calibsJson,"source":"$source","n":${top.size + omitted},"n_failed":$nFailed,"io":$ioJson,"queries":$qsTop,"queries_omitted":$omitted,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     // mechanical mutual exclusion with any ScaleProbe chain — fail fast
     // BEFORE building a session, so a contaminated official record
@@ -228,8 +250,8 @@ object Bench {
       "q36_seed_column_types", "q37_exposure_select", "q38_metric_calculate",
       "q39_source_staging", "q40_run_hooks", "q41_dbt_utils_shims",
       "q42_model_contract", "q43_test_severity_audit", "q44_analysis_compile")
-    val ioJson = ioQueries.filter(queries.contains)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val io = ioQueries.filter(queries.contains)
+    val ioJson = io.map("\"" + _ + "\"").mkString("[", ",", "]")
     // `failed` keeps its name-only shape (the driver parses it);
     // `failed_detail` carries the reason so a failed official record is
     // self-diagnosing (r9 verdict item 3)
@@ -242,14 +264,14 @@ object Bench {
     // across three sweeps — a cross-round comparison needs to know it)
     val sweepTotals = perSweep
       .map(m => ok.keys.map(k => m(k).times.min).sum)
-      .map(v => f"$v%.3f").mkString("[", ",", "]")
+      .map(fixed(_, 3)).mkString("[", ",", "]")
     // record provenance (r16 verdict item 4: two "official" r16 records
     // coexisted — the builder's close run and the driver's post-close
     // run — and nothing in either file said which was which): the
     // harness stamps who invoked it; round_close exports builder-close
     val source = sys.env.getOrElse("SPARK_GRAFT_BENCH_SOURCE", "driver")
-    val calibsJson = sweepCalibs.map(c => f"$c%.6f").mkString("[", ",", "]")
-    val calibsIoJson = sweepCalibsIo.map(c => f"$c%.6f").mkString("[", ",", "]")
+    val calibsJson = sweepCalibs.map(fixed(_, 6)).mkString("[", ",", "]")
+    val calibsIoJson = sweepCalibsIo.map(fixed(_, 6)).mkString("[", ",", "]")
     // "queries" carries the official (median) statistic; the explicit
     // "queries_median" alias says so to any consumer diffing rounds
     val json =
@@ -334,12 +356,9 @@ object Bench {
     // record entirely (the r1/r2 failure mode), which is never worth a
     // few more sub-2s entries whose deltas are noise anyway
     val lineBudget = 1650
-    val valueCalib = total / calib
-    def summaryWith(entries: Seq[(String, Double)], omitted: Int): String = {
-      val qsTop = entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"value_calib":$valueCalib,"unit":"sec","stat":"median_of_sweeps","sweeps":$sweeps,"calib":$calib,"calib_io":$calibIo,"calibs":$calibsJson,"source":"$source","n":${ok.size},"n_failed":${failed.size},"io":$ioJson,"queries":$qsTop,"queries_omitted":$omitted,"sf":"$sfDir"}"""
-    }
+    def summaryWith(entries: Seq[(String, Double)], omitted: Int): String =
+      contractLine(total, calib, calibIo, sweepCalibs.toSeq, sweeps, source,
+        failed.size, io, entries, omitted, sfDir)
     val byCost = ok.toSeq.sortBy { case (k, v) => (-v, k) }
     // largest prefix of the cost-ordered queries that keeps the line
     // within budget (every prefix is monotonically longer, so the scan

@@ -28,7 +28,15 @@ object Incremental {
   sealed trait Strategy
   case object Append extends Strategy
   final case class Merge(uniqueKey: Seq[String]) extends Strategy
-  final case class InsertOverwrite(partitionBy: Seq[String]) extends Strategy
+  /** Needs at least one partition column: without one there is no
+    * partition to overwrite, and the partitioned write would turn into a
+    * column-less round-robin rebalance of the whole table.
+    */
+  final case class InsertOverwrite(partitionBy: Seq[String]) extends Strategy {
+    require(partitionBy.nonEmpty,
+      "InsertOverwrite needs at least one partition column; use Append or " +
+        "Merge for an unpartitioned table")
+  }
 
   /** `is_incremental()` watermark idiom: the max of `col` already loaded,
     * collected eagerly to the driver (a single scalar from a small

@@ -18,25 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusClean {
 
-  /** Survivors of the 4-stage cleaning pipeline: quality → exact-dup →
-    * near-dup (keep the lowest id of each similar pair) → stratified
-    * sample with per-stratum rates.
-    *
-    * Column contract: the input must not already carry the metric columns
-    * [[TextAnalysis.qualityMetrics]] owns, nor `fingerprint` — they are
-    * overwritten as working columns. Ids are assumed unique and
-    * non-negative (the Sampling id-domain contract).
-    *
-    * Materialization: downstream stages re-evaluate the upstream subtree
-    * several times without a cut (LSH reads its input for signatures and
-    * twice for verification sets — 3× the dominant I/O at corpus scale).
-    * `materializeCut` is applied to the post-exact-dedup frame to break
-    * that: pass `_.localCheckpoint(true)` (one in-memory materialization,
-    * no CacheManager registration, so repeated builds stay independent)
-    * or `_.persist(...)` if the caller manages unpersist; default
-    * `identity` keeps the pipeline fully lazy (storage-level decisions
-    * stay with the caller).
-    */
   /** Every intermediate frame of [[pipeline]], in stage order — so
     * audits (the x50 waterfall) count the SAME DataFrames the pipeline
     * executes instead of re-deriving the chain.
@@ -50,20 +31,48 @@ object CorpusClean {
       "near_dedup" -> nearKept, "sample" -> sampled)
   }
 
-  /** `lshMaxBucket` passes through to [[TextDedup.minhashLshPairs]]'
+  /** The 4-stage cleaning pipeline, every stage's frame kept: quality →
+    * exact-dup → near-dup (keep the lowest id of each similar pair) →
+    * stratified sample with per-stratum rates.
+    *
+    * Column contract: the input must not already carry the metric columns
+    * [[TextAnalysis.qualityMetrics]] owns, nor `fingerprint` — they are
+    * overwritten as working columns. Ids are assumed unique and
+    * non-negative (the Sampling id-domain contract).
+    *
+    * Materialization: downstream stages re-evaluate the upstream subtree
+    * several times without a cut (LSH reads its input for signatures and
+    * twice for verification sets — 3× the dominant I/O at corpus scale).
+    * `materializeCut` is applied to the post-exact-dedup frame to break
+    * that: pass [[TextDedup.eagerCut]] (one materialization, no
+    * CacheManager registration, so repeated builds stay independent) or
+    * `_.persist(...)`; default `identity` keeps the pipeline fully lazy.
+    * Storage-level decisions stay with the caller, and so does release:
+    * a cut's generation stays in executor storage until the caller
+    * unpersists it.
+    *
+    * `cutAllStages`: apply `materializeCut` to EVERY intermediate stage
+    * frame (quality, nearKept), not just the exact-dedup survivors —
+    * for consumers that read the `ordered` stage list more than once
+    * (the x50 waterfall counts every stage, so a lazy `nearKept` would
+    * re-run the whole LSH pair chain once per downstream count; r17).
+    * The default stays false: a single-consumer chain pays the extra
+    * materialization barriers for nothing.
+    *
+    * `lshMaxBucket` passes through to [[TextDedup.minhashLshPairs]]'
     * stop-bucket cap — the r7 sf10 probe measured the UNCAPPED
     * candidate set as the whole pipeline's super-linear term (x11/x50
     * grew ~50x at 10x docs while every other stage stayed ~2x), so at
     * open-web scale the cap is this pipeline's linearity knob too.
     * Default None keeps exact all-in-bucket-pairs semantics.
-    */
-  /** `lshBandGroups` passes through to [[TextDedup.minhashLshPairs]]'
+    *
+    * `lshBandGroups` passes through to [[TextDedup.minhashLshPairs]]'
     * band-group split — the DISK knob (the cap bounds candidate compute;
     * the grouping bounds the live shuffle-spill footprint of the LSH
     * stage at ~1/groups, which is what keeps the pipeline runnable when
     * per-node scratch, not CPU, is the binding constraint).
-    */
-  /** `lshRecallFloor` is the RECALL knob — the third face of the same
+    *
+    * `lshRecallFloor` is the RECALL knob — the third face of the same
     * LSH stage: instead of a hand-picked cap (`lshMaxBucket`), the
     * pipeline prices the floor through the measured recall table
     * ([[TextDedup.budgetForRecall]] — refusing floors/corpus sizes the
@@ -74,14 +83,6 @@ object CorpusClean {
     * jobs on the (typically checkpointed) survivor frame — a count and
     * the band-bucket histogram — before the LSH stage proper; both are
     * narrow aggregates any production run affords.
-    */
-  /** `cutAllStages`: apply `materializeCut` to EVERY intermediate stage
-    * frame (quality, nearKept), not just the exact-dedup survivors —
-    * for consumers that read the `ordered` stage list more than once
-    * (the x50 waterfall counts every stage, so a lazy `nearKept` would
-    * re-run the whole LSH pair chain once per downstream count; r17).
-    * The pipeline default stays false: a single-consumer chain pays
-    * the extra materialization barriers for nothing.
     */
   def stages(docs: DataFrame, idCol: String, textCol: String,
       stratumCol: String, nearDupThreshold: Double,
@@ -132,6 +133,7 @@ object CorpusClean {
     CleanStages(docs, quality, exactKept, nearKept, sampled)
   }
 
+  /** The survivors of [[stages]] (its `sampled` frame). */
   def pipeline(docs: DataFrame, idCol: String, textCol: String,
       stratumCol: String, nearDupThreshold: Double,
       rates: Map[String, Int], defaultPercent: Int = 0,

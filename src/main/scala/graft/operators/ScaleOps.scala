@@ -11,17 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleOps {
 
-  /** Materialize `df` bucketed by `keys` so downstream equi-joins and
-    * aggregations on those keys read pre-partitioned data with NO
-    * exchange: both sides of a join bucketed to the same count on the
-    * join keys co-locate bucket-for-bucket. This is the batch analogue
-    * of co-partitioned storage — at 100 TB the exchange this avoids is
-    * the dominant cost of a fact-fact join.
-    */
-  /** `path` makes the table EXTERNAL at that location (callers that must
-    * not write into the session warehouse dir — e.g. demos running from
-    * a repo checkout — pass an explicit scratch path).
-    */
   /** Write-side distribution (r18, guide §6 small files — the bucketed
     * sibling of [[writePartitioned]]'s r17 fix): a bucketed write with
     * no distribution makes EVERY upstream task write one file per
@@ -29,28 +18,35 @@ object ScaleOps {
     * store measured 3 upstream tasks × 8 buckets = 24 fragments per
     * write at demo scale; at corpus scale N is the full shuffle width).
     * Every probe/join then opens N×B files and every REFRESH relists
-    * them. The fix shuffles by the bucket columns into exactly
-    * `buckets` partitions first: `repartition(buckets, keys)` is the
-    * same HashPartitioning(keys, buckets) expression Spark's bucketing
-    * hashes rows with, so each output task holds exactly one bucket's
-    * rows and writes exactly ONE file — B files total, the layout a
-    * bucketed store is supposed to have. A REBALANCE hint (not a hard
-    * `repartition(buckets)`) does the aligning: AQE coalesces the
-    * exchange to as few tasks as the data warrants (locally: one task →
-    * still exactly B files, the writer splits by bucket id within the
-    * task) and can SPLIT a fat bucket across tasks at corpus scale
-    * (several well-sized files for that bucket — valid bucketed layout —
-    * instead of one straggling writer), so write parallelism is sized by
-    * data volume rather than capped at `buckets`.
+    * them. A REBALANCE hint on the bucket columns hash-partitions the
+    * rows by `keys` into `spark.sql.shuffle.partitions` partitions (not
+    * into B), and AQE coalesces adjacent partitions to the advisory size
+    * and can SPLIT a fat one. Each writer task still writes one file per
+    * bucket id it holds, so the file count is bounded by the number of
+    * pre-coalesce partitions, not pinned at B (locally, where AQE
+    * coalesces to one task, it comes out at B). Bucketed reads accept
+    * several files per bucket, so the layout stays valid, and write
+    * parallelism is sized by data volume rather than capped at B.
     */
-  private def bucketAligned(df: DataFrame, buckets: Int,
-      keys: Seq[String]): DataFrame =
+  private def bucketAligned(df: DataFrame, keys: Seq[String]): DataFrame =
     df.hint("rebalance", keys.map(col): _*)
 
+  /** Materialize `df` bucketed by `keys` so downstream equi-joins and
+    * aggregations on those keys read pre-partitioned data with NO
+    * exchange: both sides of a join bucketed to the same count on the
+    * join keys co-locate bucket-for-bucket. This is the batch analogue
+    * of co-partitioned storage — at 100 TB the exchange this avoids is
+    * the dominant cost of a fact-fact join. The write is distributed by
+    * [[bucketAligned]].
+    *
+    * `path` makes the table EXTERNAL at that location (callers that must
+    * not write into the session warehouse dir — e.g. demos running from
+    * a repo checkout — pass an explicit scratch path).
+    */
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String], sortCols: Seq[String] = Nil,
       path: Option[String] = None): Unit = {
-    val w0 = bucketAligned(df, buckets, keys)
+    val w0 = bucketAligned(df, keys)
       .write.mode("overwrite").bucketBy(buckets, keys.head, keys.tail: _*)
     val w1 = if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*) else w0
     val w2 = path.fold(w1)(p => w1.option("path", p))
@@ -70,10 +66,10 @@ object ScaleOps {
   def appendBucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String], sortCols: Seq[String] = Nil): Unit = {
     // same write-side distribution as [[writeBucketed]]: each append
-    // adds exactly `buckets` files to the store instead of
+    // adds files bounded by the pre-coalesce partitions instead of
     // tasks × buckets fragments — over a crawl loop's lifetime the
     // difference compounds into the store's whole listing cost
-    val w0 = bucketAligned(df, buckets, keys)
+    val w0 = bucketAligned(df, keys)
       .write.mode("append").bucketBy(buckets, keys.head, keys.tail: _*)
     val w1 = if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*) else w0
     w1.format("parquet").saveAsTable(table)
@@ -85,8 +81,8 @@ object ScaleOps {
     * files, before any row is read. Pick partition columns of bounded
     * cardinality (date, region), never high-cardinality keys (file-per-
     * value explosion); bucket WITHIN partitions for join co-location.
-    */
-  /** Output file sizing (r17, guide §6): without a write-side
+    *
+    * Output file sizing (r17, guide §6): without a write-side
     * distribution, EVERY upstream task writes one file per partition
     * value it happens to hold — N scan tasks × D days = N·D small files
     * at corpus scale (the listing/open cost then hits every reader,

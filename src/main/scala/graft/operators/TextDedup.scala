@@ -333,9 +333,13 @@ object TextDedup {
     * [[incrementalLshPairs]]). Probing never re-indexes the corpus —
     * batch band keys equi-join the store on (band, key); when the
     * store is bucketed by those keys ([[graft.operators.ScaleOps
-    * .writeBucketed]]) the store side joins with NO exchange.
-    */
-  /** `maxBucket` is the incremental analogue of [[minhashLshPairs]]'
+    * .writeBucketed]]) the store side joins with NO exchange. Its
+    * cross-set verify stays separate from [[verifyPairs]]: the two pair
+    * sides come from different bases (batch and corpus). The generations
+    * an eager `materializeCandidates` cuts stay in executor storage
+    * until the caller unpersists them.
+    *
+    * `maxBucket` is the incremental analogue of [[minhashLshPairs]]'
     * stop-bucket cap — the crawl loop's linearity knob (r7 verdict: the
     * probe side still rode the uncapped candidate volume): STORE buckets
     * with more than `maxBucket` members are dropped before the probe
@@ -347,8 +351,8 @@ object TextDedup {
     * Cross-set semantics keep single-member buckets (bn >= 1 pairs with
     * a batch doc; the >= 2 floor is a SELF-join notion). `None` keeps
     * exact all-collisions semantics.
-    */
-  /** `prebuiltBatchIndex`: an already-derived [[lshIndex]] frame of the
+    *
+    * `prebuiltBatchIndex`: an already-derived [[lshIndex]] frame of the
     * BATCH (`doc_id, band, key`) to probe with instead of deriving one
     * here — the crawl loop indexes each accepted batch anyway (the
     * append half), so deriving the batch index once and passing it to
@@ -433,25 +437,122 @@ object TextDedup {
     batch.sparkSession.catalog.refreshTable(table)
   }
 
+  /** Candidate pairs of a `(doc_id, band, key)` band frame — the ONE
+    * (band, key) self-join of the LSH machinery: [[minhashLshPairs]],
+    * [[minhashLshPairsWithMinBucket]], the survival instruments and
+    * [[estimatePairsFromSignatures]] all build candidates here, so no
+    * candidate set can silently diverge from the exact path's. Bucket
+    * size is a WINDOW over the (band, key) shuffle — one exchange
+    * carries the count, the live-bucket filter (`bn ≥ 2`, and
+    * `bn ≤ maxBucket` under a cap), AND both self-join sides (merge
+    * hint: broadcasting a corpus-scale band index is never right, and an
+    * AQE broadcast would also recompute the upstream signature aggregate
+    * per side — plan-gated in TextDedupSpec). The join carries a
+    * `doc_id <` residual and is all whole-stage codegen; the previous
+    * collect_set-per-bucket form was an ObjectHashAggregate that falls
+    * back to sort-based aggregation past 128 groups, and at 500k docs
+    * (32M buckets) that fallback sorted and spilled ~50 GB.
+    *
+    * `withMinBn` keeps each pair's smallest shared live-bucket size as
+    * `__graft_min_bn` — `min(bn)` over the same (pair) groups instead of
+    * `distinct`. bn is a property of the BUCKET, identical on both join
+    * sides, so `min(a.bn)` over the pair's shared buckets IS min_bn.
+    */
+  private def lshCandidatePairs(bands: DataFrame, maxBucket: Option[Int],
+      withMinBn: Boolean = false): DataFrame = {
+    val bn = count(lit(1)).over(Window.partitionBy(col("band"), col("key")))
+    val live = bands.withColumn("bn", bn)
+      .filter(maxBucket.fold(col("bn") >= 2)(cap =>
+        col("bn") >= 2 && col("bn") <= cap))
+      .select((Seq("doc_id", "band", "key") ++
+        (if (withMinBn) Seq("bn") else Nil)).map(col): _*)
+    val pairs = live.as("a").hint("merge")
+      .join(live.as("b").hint("merge"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.doc_id") < col("b.doc_id"))
+    val ids = Seq(col("a.doc_id").as("__graft_id_a"),
+      col("b.doc_id").as("__graft_id_b"))
+    if (withMinBn) pairs.groupBy(ids: _*).agg(min(col("a.bn")).as("__graft_min_bn"))
+    else pairs.select(ids: _*).distinct()
+  }
+
+  /** The ONE verify executor of the LSH pair paths: the `(__graft_id_a,
+    * __graft_id_b)` rows of `cand` whose exact shingle Jaccard against
+    * `corpus` is ≥ `threshold`, as `(id_a, id_b, jaccard)`. Under a
+    * `materialize` strategy the caller has already cut `cand` with it
+    * (callers re-read the cut: min_bn re-attach, survival tails). The
+    * strategy picks the verify shape:
+    *   - `None`: lazy verify against shingle sets of the WHOLE corpus.
+    *   - `Some(m)`: shingle sets only for docs on a candidate pair (a
+    *     semi join — no broadcast hint: the candidate-doc set is O(docs
+    *     with a near-dup), unbounded at corpus scale, so AQE broadcasts
+    *     it only when it fits). With `cutSets` the sets frame is cut by
+    *     `m` before its two pair-side joins ([[verifyCandidatePairs]]);
+    *     whether that barrier pays is measured per caller.
+    *   - `Some(_)` with `verifyGroups = Some(g)`: `g` sequential
+    *     hash-slices of the eagerly cut candidate frame (see
+    *     [[minhashLshPairs]]' `verifyGroups`). Each slice semi-joins its
+    *     own candidate docs, verifies, checkpoints its (small) output and
+    *     releases its verify shuffles before the next slice; the slice
+    *     outputs stay persisted because they ARE the result. The slice
+    *     key is a deterministic pair hash, so the union equals the
+    *     unsliced verify exactly (spec-pinned).
+    */
+  private def verifyPairs(cand: DataFrame, corpus: DataFrame, idCol: String,
+      textCol: String, threshold: Double,
+      materialize: Option[DataFrame => DataFrame], verifyGroups: Option[Int],
+      cutSets: Boolean): DataFrame = {
+    require(verifyGroups.isEmpty || materialize.nonEmpty,
+      "verifyGroups needs materialized candidates (set bandGroups, " +
+        "materializeCandidates or materialize) — slicing a lazy candidate " +
+        "plan would re-run candidate generation once per slice")
+    def onCandidateDocs(c: DataFrame): DataFrame = corpus.join(
+      c.select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
+        .distinct(),
+      Seq(idCol), "left_semi")
+    (materialize, verifyGroups) match {
+      case (None, _) => verifyCandidatePairs(cand, corpus, idCol, textCol, threshold)
+      case (Some(m), None) =>
+        verifyCandidatePairs(cand, onCandidateDocs(cand), idCol, textCol,
+          threshold, cut = if (cutSets) m else identity)
+      case (Some(_), Some(groups)) =>
+        require(groups >= 1, s"verifyGroups must be >= 1, got $groups")
+        val cut = ensureEagerCut(cand)
+        (0 until groups).map { g =>
+          val slice = cut.filter(
+            pmod(xxhash64(col("__graft_id_a"), col("__graft_id_b")),
+              lit(groups.toLong)) === g)
+          val (out, _) = checkpointTracked(verifyCandidatePairs(slice,
+            onCandidateDocs(slice), idCol, textCol, threshold))
+          releaseShuffles() // this slice's shingle-build + verify-join shuffles
+          out
+        }.reduce(_ union _)
+    }
+  }
+
   /** MinHash+LSH near-dup pairs (X2b) — the 100 TB dedup path: shingle →
     * codegen hash → single-buffer 128-slot minhash signature (map-side
-    * combinable) → 64 bands of r=2 → per-bucket candidate pairs → exact
-    * Jaccard verification at `threshold`. At threshold t the per-pair miss
-    * probability is (1−t²)^64 (≤1e-8 at t=0.5), while cluster cost is
-    * O(n·bands) shuffle instead of O(n²).
-    */
-  /** `materializeCandidates` selects the verification strategy. `None`
+    * combinable) → 64 bands of r=2 → per-bucket candidate pairs
+    * ([[lshCandidatePairs]]) → exact Jaccard verification at `threshold`
+    * ([[verifyPairs]]). At threshold t the per-pair miss probability is
+    * (1−t²)^64 (≤1e-8 at t=0.5), while cluster cost is O(n·bands)
+    * shuffle instead of O(n²).
+    *
+    * `materializeCandidates` selects the verification strategy. `None`
     * (default): the candidate pairs stay lazy and exact verification
     * joins against shingle sets of the WHOLE corpus — one job, full
     * operator overlap; best when a corpus scan is cheap (it is re-read
-    * twice, once per pair side). `Some(m)` — e.g.
-    * `Some(_.localCheckpoint(true))`: the candidate pair set is
-    * materialized via `m` and shingle sets are built ONLY for docs that
-    * appear in a candidate pair (semi join — AQE picks broadcast when
-    * the candidate set fits). That is the 100 TB path — at scale the two
-    * extra full-corpus shingle builds dwarf the materialization barrier,
-    * while at demo scale the barrier costs more than it saves (measured;
-    * hence not the default).
+    * twice, once per pair side). `Some(m)` — e.g. `Some(eagerCut)`: the
+    * candidate pair set is materialized via `m` and shingle sets are
+    * built ONLY for docs that appear in a candidate pair, themselves cut
+    * by `m` once for the two pair-side joins. That is the 100 TB path —
+    * at scale the two extra full-corpus shingle builds dwarf the
+    * materialization barrier, while at demo scale the barrier costs more
+    * than it saves (measured; hence not the default). Storage: the
+    * generations an eager `m` cuts stay in executor storage until the
+    * caller unpersists them (`sparkContext.getPersistentRDDs`) — the
+    * returned frame still reads them, so the operator cannot release
+    * them itself.
     *
     * `maxBucket` is the stop-BUCKET cap, the banding analogue of
     * [[ngramJaccardPairs]]' stop-shingle `maxDocFreq`: band buckets with
@@ -467,79 +568,33 @@ object TextDedup {
     * collisions are O(n²·p)), so at open-web scale the cap is the knob
     * that keeps LSH linear.
     *
-    * Candidate generation is a (band, key) equi SELF-JOIN with a
-    * `doc_id <` residual hanging off the same hash-partitioning as the
-    * bucket-size count (ReuseExchange shuffles the index once) — all
-    * whole-stage codegen. The previous collect_set-per-bucket form was
-    * an ObjectHashAggregate that falls back to sort-based aggregation
-    * past 128 groups; at 500k docs (32M buckets) that fallback sorted
-    * and spilled ~50 GB (the same lesson as x2c2's r4 rewrite).
-    */
-  /** Candidate pairs of a `(doc_id, band, key)` band frame — the ONE
-    * definition of the LSH candidate machinery ([[minhashLshPairs]] and
-    * [[estimatePairsFromSignatures]] share it, so the estimator's
-    * candidate set can never silently diverge from the exact path's):
-    * bucket size as a WINDOW over the (band, key) shuffle — one exchange
-    * carries the count, the live-bucket filter, AND both self-join sides
-    * (merge hint: broadcasting a corpus-scale band index is never right,
-    * and an AQE broadcast would also recompute the upstream signature
-    * aggregate per side — plan-gated in TextDedupSpec).
-    */
-  private def lshCandidatePairs(bands: DataFrame,
-      maxBucket: Option[Int]): DataFrame = {
-    val bn = count(lit(1)).over(Window.partitionBy(col("band"), col("key")))
-    val live = bands.withColumn("bn", bn)
-      .filter(maxBucket.fold(col("bn") >= 2)(cap =>
-        col("bn") >= 2 && col("bn") <= cap))
-      .select(col("doc_id"), col("band"), col("key"))
-    live.as("a").hint("merge")
-      .join(live.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("__graft_id_a"), col("b.doc_id").as("__graft_id_b"))
-      .distinct()
-  }
-
-  /** `bandGroups` bounds the candidate generation's LIVE shuffle-spill
-    * footprint — the disk knob the r10 2M-doc probes were missing: the
-    * monolithic formulation is ONE job whose shuffle files (signature
-    * aggregate + band-bucket window + band self-join + pair distinct)
-    * all coexist on disk until the job ends; at 2M docs that cumulative
-    * footprint exceeded the probe box's 79 G of scratch even under zstd.
-    * With `Some(g)` the band index is localCheckpoint'ed ONCE (after
-    * which the signature aggregate's shuffle files release) and the
-    * (band, key) self-join runs as `g` SEQUENTIAL passes over bands
-    * ≡ i (mod g), each pass's pair set checkpointed and its shuffle
-    * files GC-released before the next pass starts — live scratch is
-    * bounded at ~1/g of the monolithic job's, identical output (band
-    * membership partitions the candidate universe; the final distinct
-    * dedups pairs that collide in bands of different groups —
-    * spec-pinned equality). This is also the honest 100 TB story: a
-    * real cluster bounds spill per STAGE, not per pipeline.
+    * `bandGroups` bounds candidate generation's LIVE shuffle-spill
+    * footprint: unsliced, generation is ONE job whose shuffle files
+    * (signature aggregate + band-bucket window + band self-join + pair
+    * distinct) all coexist on disk until it ends — at 2M docs more than
+    * the probe box's 79 G of scratch even under zstd. With `Some(g)` the
+    * band index is cut ONCE and the self-join runs as `g` SEQUENTIAL
+    * passes over bands ≡ i (mod g), each pass checkpointed and its
+    * shuffle files GC-released before the next starts — live scratch
+    * ~1/g, identical output (band membership partitions the candidate
+    * universe; the final distinct dedups pairs that collide in bands of
+    * different groups — spec-pinned). Grouped mode always materializes
+    * the candidate set: `materializeCandidates` selects HOW the unioned
+    * set is cut (default [[eagerCut]]), and verification shingles only
+    * candidate docs. Demo scale should keep `None`: g sequential passes
+    * forfeit operator overlap, costing wall-clock to save scratch.
     *
-    * Grouped mode always materializes the candidate set (the per-pass
-    * results already are): `materializeCandidates` selects HOW the
-    * unioned set is cut (default `_.localCheckpoint(true)`), and
-    * verification shingles only candidate docs via semi joins — the
-    * scale path, which is the only regime where `bandGroups` makes
-    * sense. Demo scale should keep `None`: g sequential passes forfeit
-    * operator overlap, costing wall-clock to save scratch.
-    */
-  /** `verifyGroups` is the verify-stage analogue of `bandGroups` — the
-    * SECOND disk knob: the exact-Jaccard verification joins attach a
-    * shingle set to each side of every candidate pair, so the verify
-    * stage's live shuffle footprint is O(candidates × set size) — at
-    * 160M+ candidates that alone exceeds a box/executor's scratch even
-    * when candidate GENERATION was bounded by `bandGroups` (the r11
-    * 2M-doc fixed-cap face survived generation and died in the verify
-    * tail). With `Some(g)` the MATERIALIZED candidate set verifies as
-    * `g` sequential hash-slices (deterministic xxhash64 of the pair),
-    * each slice's result checkpointed and its verify shuffles released
-    * before the next slice starts — live verify scratch is ~1/g,
-    * identical output (the slices partition the candidate set; verify
-    * is per-pair). Requires materialized candidates (`bandGroups`, or
-    * `materializeCandidates` on the monolithic path): slicing a LAZY
-    * candidate plan would re-run candidate generation per slice.
+    * `verifyGroups` is the verify-stage analogue of `bandGroups`: the
+    * verification joins attach a shingle set to each side of every
+    * candidate pair, so the verify stage's live shuffle footprint is
+    * O(candidates × set size) — at 160M+ candidates that alone exceeds a
+    * box's scratch even when generation was bounded (the r11 2M-doc
+    * fixed-cap face died in the verify tail). With `Some(g)` the
+    * MATERIALIZED candidate set verifies as `g` sequential hash-slices
+    * ([[verifyPairs]]), live verify scratch ~1/g, identical output.
+    * Requires materialized candidates (`bandGroups` or
+    * `materializeCandidates`): slicing a LAZY candidate plan would re-run
+    * candidate generation per slice.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double,
@@ -548,16 +603,13 @@ object TextDedup {
       bandGroups: Option[Int] = None,
       verifyGroups: Option[Int] = None): DataFrame = bandGroups match {
     case Some(g) =>
-      minhashLshPairsGrouped(df, idCol, textCol, threshold,
-        materializeCandidates.getOrElse(eagerCut), maxBucket, g,
-        verifyGroups)
+      val m = materializeCandidates.getOrElse(eagerCut _)
+      verifyPairs(bandGroupedCandidates(df, idCol, textCol, m, maxBucket, g),
+        df, idCol, textCol, threshold, Some(m), verifyGroups, cutSets = false)
     case None =>
-      require(verifyGroups.isEmpty || materializeCandidates.nonEmpty,
-        "verifyGroups needs materialized candidates (set bandGroups or " +
-          "materializeCandidates) — slicing a lazy candidate plan would " +
-          "re-run candidate generation once per slice")
-      minhashLshPairsMonolithic(df, idCol, textCol, threshold,
-        materializeCandidates, maxBucket, verifyGroups)
+      val cand = lshCandidatePairs(lshIndex(df, idCol, textCol), maxBucket)
+      verifyPairs(materializeCandidates.fold(cand)(_(cand)), df, idCol,
+        textCol, threshold, materializeCandidates, verifyGroups, cutSets = true)
   }
 
   /** Trust a caller-provided materialization only when it actually
@@ -566,157 +618,62 @@ object TextDedup {
     * anything else — `identity`, `cache()`, another lazy cut — is re-cut
     * here. The grouped candidate path needs the cut before it RELEASES
     * the pass generations the lazy plan still references (r11 advice);
-    * the grouped VERIFY path needs it so each slice filters a computed
-    * RDD instead of silently re-running candidate generation once per
-    * slice (r12 advice — the monolithic path's require checked only
-    * that a materializer was provided, not that it cut).
+    * the sliced verify needs it so each slice filters a computed RDD
+    * instead of silently re-running candidate generation once per slice
+    * (r12 advice — a require that a materializer was provided does not
+    * check that it cut).
     */
   private[operators] def ensureEagerCut(df: DataFrame): DataFrame =
     if (df.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) df
     else eagerCut(df)
 
-  /** [[minhashLshPairs]] against an ALREADY-BUILT band index — the
-    * re-entry point for callers that hold the [[lshIndex]] output
-    * (typically checkpointed once and shared): calibration sweeps,
-    * multi-preset demos, and any pipeline that derives the
-    * shingle→signature→band chain once and runs the capped candidate +
-    * verify tail several times (x64 ran the FULL chain once per preset
-    * before this existed — the whole suite's slowest query, at 3× the
-    * needed signature work). `bands` must be [[lshIndex]]-shaped
-    * (`doc_id, band, key`); `corpus` supplies the texts for exact
-    * verification, exactly as in the from-text path — spec-pinned:
-    * `minhashLshPairsFromIndex(lshIndex(df), df, …) ≡
-    * minhashLshPairs(df, …)` pair-for-pair.
-    */
-  def minhashLshPairsFromIndex(bands: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame] = None,
-      maxBucket: Option[Int] = None,
-      verifyGroups: Option[Int] = None): DataFrame = {
-    val need = Set("doc_id", "band", "key")
-    require(need.subsetOf(bands.columns.toSet),
-      s"band index must have columns ${need.mkString(", ")} (lshIndex " +
-        s"output); got ${bands.columns.mkString(", ")}")
-    require(verifyGroups.isEmpty || materializeCandidates.nonEmpty,
-      "verifyGroups needs materialized candidates (set " +
-        "materializeCandidates) — slicing a lazy candidate plan would " +
-        "re-run candidate generation once per slice")
-    pairsFromBands(lshCandidatePairs(bands, maxBucket), corpus, idCol,
-      textCol, threshold, materializeCandidates, verifyGroups)
-  }
-
-  /** [[minhashLshPairsFromIndex]] at cap `maxBucket`, with each verified
-    * pair's `min_bn` — its smallest shared live-bucket size — attached:
-    * `(id_a, id_b, jaccard, min_bn)`. The survival law
-    * ([[lshSurvivalStats]], spec-pinned) says a pair survives a TIGHTER
-    * cap `c ≤ maxBucket` iff `min_bn ≤ c`, so a multi-preset caller
-    * (x64: the default and high-recall budget presets differ only in
-    * their calibrated cap) runs ONE candidate + verify chain at the
-    * LOOSEST preset's cap and reads every tighter preset as a filter —
-    * r16's x64 ran the full capped chain once per preset (the suite's
-    * most expensive query) when the presets' outputs are nested by
-    * construction. Filter-equality with the per-cap operator is
-    * spec-pinned (TextDedupSpec).
+  /** [[minhashLshPairs]] at cap `maxBucket` against an ALREADY-BUILT band
+    * index, with each verified pair's `min_bn` — its smallest shared
+    * live-bucket size — attached: `(id_a, id_b, jaccard, min_bn)`.
+    * `bands` must be [[lshIndex]]-shaped (`doc_id, band, key`; anything
+    * else is refused, not misjoined), typically cut once and shared, and
+    * `corpus` supplies the texts for exact verification.
     *
-    * Cost vs one [[minhashLshPairsFromIndex]] run: the candidate
-    * aggregate keys the same (pair) groups — `min(bn)` instead of
-    * `distinct` — and the verify joins back to the candidate frame once
-    * to re-attach `min_bn` (one extra shuffle of the verified-pair set,
-    * which is ≤ the candidate set the chain already carries).
+    * The survival law ([[lshSurvivalStats]], spec-pinned) says a pair
+    * survives a TIGHTER cap `c ≤ maxBucket` iff `min_bn ≤ c`, so a
+    * multi-preset caller (x64: the default and high-recall budget
+    * presets differ only in their calibrated cap) derives the
+    * shingle→signature→band chain once and runs ONE candidate + verify
+    * chain at the LOOSEST preset's cap, reading every tighter preset as
+    * a filter. Filter-equality with the per-cap operator is spec-pinned
+    * (TextDedupSpec). Cost vs an uncapped-id [[minhashLshPairs]] tail:
+    * the candidate aggregate keys the same (pair) groups — `min(bn)`
+    * instead of `distinct` — and the verified pairs join back to the
+    * candidate frame once to re-attach `min_bn` (one extra shuffle of
+    * the verified-pair set, which is ≤ the candidate set).
+    *
+    * `materializeCandidates` / `verifyGroups` (and the storage the cuts
+    * keep) as in [[minhashLshPairs]].
     */
   def minhashLshPairsWithMinBucket(bands: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double, maxBucket: Int,
       materializeCandidates: Option[DataFrame => DataFrame] = None,
       verifyGroups: Option[Int] = None): DataFrame = {
+    val need = Set("doc_id", "band", "key")
+    require(need.subsetOf(bands.columns.toSet),
+      s"band index must have columns ${need.mkString(", ")} (lshIndex " +
+        s"output); got ${bands.columns.mkString(", ")}")
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    require(verifyGroups.isEmpty || materializeCandidates.nonEmpty,
-      "verifyGroups needs materialized candidates (set " +
-        "materializeCandidates) — slicing a lazy candidate plan would " +
-        "re-run candidate generation once per slice")
-    val bnc = count(lit(1)).over(Window.partitionBy(col("band"), col("key")))
-    val live = bands.withColumn("bn", bnc)
-      .filter(col("bn") >= 2 && col("bn") <= maxBucket)
-      .select(col("doc_id"), col("band"), col("key"), col("bn"))
-    // bn is a property of the BUCKET, identical on both join sides, so
-    // min(a.bn) over the pair's shared live buckets IS min_bn
-    val candMin0 = live.as("a").hint("merge")
-      .join(live.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("__graft_id_a"),
-        col("b.doc_id").as("__graft_id_b"))
-      .agg(min(col("a.bn")).as("__graft_min_bn"))
-    val candMin = materializeCandidates.fold(candMin0)(m => m(candMin0))
-    val candIds = candMin.select(col("__graft_id_a"), col("__graft_id_b"))
-    val verified = materializeCandidates match {
-      case None =>
-        verifyCandidatePairs(candIds, corpus, idCol, textCol, threshold)
-      case Some(m) =>
-        verifyGroups match {
-          case Some(vg) =>
-            verifyCandidatePairsGrouped(ensureEagerCut(candIds), corpus,
-              idCol, textCol, threshold, vg)
-          case None =>
-            val docsOf = candIds
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            verifyCandidatePairs(candIds,
-              corpus.join(docsOf, Seq(idCol), "left_semi"),
-              idCol, textCol, threshold, cut = m)
-        }
-    }
-    verified.join(candMin.select(col("__graft_id_a").as("id_a"),
+    val cand = lshCandidatePairs(bands, Some(maxBucket), withMinBn = true)
+    val candMin = materializeCandidates.fold(cand)(_(cand))
+    verifyPairs(candMin.select(col("__graft_id_a"), col("__graft_id_b")),
+        corpus, idCol, textCol, threshold, materializeCandidates,
+        verifyGroups, cutSets = true)
+      .join(candMin.select(col("__graft_id_a").as("id_a"),
         col("__graft_id_b").as("id_b"), col("__graft_min_bn").as("min_bn")),
-      Seq("id_a", "id_b"))
+        Seq("id_a", "id_b"))
       .select(col("id_a"), col("id_b"), col("jaccard"), col("min_bn"))
-  }
-
-  private def minhashLshPairsMonolithic(df: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame],
-      maxBucket: Option[Int],
-      verifyGroups: Option[Int] = None): DataFrame =
-    pairsFromBands(lshCandidatePairs(lshIndex(df, idCol, textCol), maxBucket),
-      df, idCol, textCol, threshold, materializeCandidates, verifyGroups)
-
-  /** The shared candidate→verify tail of the from-text and from-index
-    * monolithic paths (ONE definition, so the index-reusing face can
-    * never drift from [[minhashLshPairs]]' semantics).
-    */
-  private def pairsFromBands(lazyCand0: DataFrame, df: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      materializeCandidates: Option[DataFrame => DataFrame],
-      verifyGroups: Option[Int]): DataFrame = {
-    val lazyCand = lazyCand0
-    materializeCandidates match {
-      case None => verifyCandidatePairs(lazyCand, df, idCol, textCol, threshold)
-      case Some(m) =>
-        val c = m(lazyCand)
-        verifyGroups match {
-          case Some(vg) =>
-            verifyCandidatePairsGrouped(ensureEagerCut(c), df, idCol, textCol,
-              threshold, vg)
-          case None =>
-            val candIds = c
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            // no broadcast hint: the candidate-doc set is O(docs with a
-            // near-dup), unbounded at corpus scale — let AQE broadcast it
-            // only when it actually fits, else a shuffled semi join.
-            // The caller's materializer also cuts the shingle-set frame
-            // (see verifyCandidatePairs: lazy sets evaluate once per
-            // pair side)
-            verifyCandidatePairs(c, df.join(candIds, Seq(idCol), "left_semi"),
-              idCol, textCol, threshold, cut = m)
-        }
-    }
   }
 
   /** Exact-Jaccard verification of a `(__graft_id_a, __graft_id_b)`
     * candidate frame against shingle sets built from `setsBase` — the
-    * shared tail of the monolithic and band-grouped paths (ONE
-    * definition, so the grouped path's semantics can never drift).
+    * join [[verifyPairs]] runs in each of its shapes.
     *
     * `cut` materializes the shingle-set frame ONCE before the two pair-
     * side joins: the sets frame is joined by `__graft_id_a` and again by
@@ -724,10 +681,9 @@ object TextDedup {
     * reuse never applies and a LAZY sets plan (text scan → semi join →
     * tokenize → shingle build) evaluates once per side (r17 verdict
     * item 4: the sampled survival instrument's verify rebuilt shingle
-    * sets from text for both pair sides). Callers holding a
-    * materialization strategy pass it here; the default `identity`
-    * keeps the lazy demo contract (at demo scale the barrier can cost
-    * more than the duplicated build — the same measured tradeoff as
+    * sets from text for both pair sides). The default `identity` keeps
+    * the lazy demo contract (at demo scale the barrier can cost more
+    * than the duplicated build — the same measured tradeoff as
     * `materializeCandidates` itself).
     */
   private def verifyCandidatePairs(cand: DataFrame, setsBase: DataFrame,
@@ -744,46 +700,15 @@ object TextDedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** [[verifyCandidatePairs]] as `groups` SEQUENTIAL hash-slices of a
-    * MATERIALIZED candidate frame (see [[minhashLshPairs]]'
-    * `verifyGroups` doc): each slice semi-joins its own candidate docs,
-    * verifies, checkpoints its (small) verified output, and releases its
-    * verify shuffles before the next slice starts — the slice outputs
-    * stay persisted because they ARE the result. The slice key is a
-    * deterministic pair hash, so the slices partition the candidate set
-    * and the union equals the monolithic verify exactly (spec-pinned).
+  /** The band-grouped candidate set (see [[minhashLshPairs]]'
+    * `bandGroups`): checkpoint the band index once, run the candidate
+    * self-join as `groups` sequential band-slice passes with per-pass
+    * checkpoint + shuffle release, union + distinct + cut the candidate
+    * set with `materialize`, then release every intermediate generation.
     */
-  private def verifyCandidatePairsGrouped(cand: DataFrame, df: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      groups: Int): DataFrame = {
-    require(groups >= 1, s"verifyGroups must be >= 1, got $groups")
-    val passes = (0 until groups).map { g =>
-      val slice = cand.filter(
-        pmod(xxhash64(col("__graft_id_a"), col("__graft_id_b")),
-          lit(groups.toLong)) === g)
-      val sliceIds = slice
-        .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-        .distinct()
-      val (out, _) = checkpointTracked(
-        verifyCandidatePairs(slice, df.join(sliceIds, Seq(idCol), "left_semi"),
-          idCol, textCol, threshold))
-      releaseShuffles() // this slice's shingle-build + verify-join shuffles
-      out
-    }
-    passes.reduce(_ union _)
-  }
-
-  /** The band-grouped candidate path (see [[minhashLshPairs]]'
-    * `bandGroups` doc): checkpoint the band index once, run the
-    * candidate self-join as `groups` sequential band-slice passes with
-    * per-pass checkpoint + shuffle release, union + distinct + cut the
-    * candidate set, release every intermediate generation, then verify
-    * over semi-joined candidate docs only.
-    */
-  private def minhashLshPairsGrouped(df: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      materialize: DataFrame => DataFrame, maxBucket: Option[Int],
-      groups: Int, verifyGroups: Option[Int] = None): DataFrame = {
+  private def bandGroupedCandidates(df: DataFrame, idCol: String,
+      textCol: String, materialize: DataFrame => DataFrame,
+      maxBucket: Option[Int], groups: Int): DataFrame = {
     require(groups >= 1, s"bandGroups must be >= 1, got $groups")
     val sc = df.sparkSession.sparkContext
     val (bands, bandIds) = checkpointTracked(lshIndex(df, idCol, textCol))
@@ -806,16 +731,7 @@ object TextDedup {
     // dead weight from here — release before the verify stage spills
     release(sc, bandIds ++ passes.flatMap(_._2).toSet)
     releaseShuffles()
-    verifyGroups match {
-      case Some(vg) =>
-        verifyCandidatePairsGrouped(cand, df, idCol, textCol, threshold, vg)
-      case None =>
-        val candIds = cand
-          .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-          .distinct()
-        verifyCandidatePairs(cand, df.join(candIds, Seq(idCol), "left_semi"),
-          idCol, textCol, threshold)
-    }
+    cand
   }
 
   /** The stop-bucket cap CALIBRATED to a candidate-pair budget — the
@@ -901,7 +817,10 @@ object TextDedup {
     * (b) the verified true-pair set before the min-bucket join re-uses
     * it on both sides — pass `Some(_.localCheckpoint(true))` at scale;
     * the `None` default keeps the whole computation lazy for
-    * oracle-checkable demo use. `verifyGroups` slices the exact-verify
+    * oracle-checkable demo use. Every generation an eager `materialize`
+    * cuts stays in executor storage until the caller unpersists it
+    * (`sparkContext.getPersistentRDDs`): the returned frame still reads
+    * them. `verifyGroups` slices the exact-verify
     * stage exactly like [[minhashLshPairs]]' knob (requires
     * `materialize`) — the instrument's k-band UNCAPPED candidate set
     * grows with n² just like the operator's, so the at-scale recall
@@ -923,42 +842,16 @@ object TextDedup {
       prebuiltIndex: Option[DataFrame] = None): DataFrame = {
     discoveryBands.foreach(k => require(k >= 1 && k <= Hashing.MinhashK / 2,
       s"discoveryBands must be in [1, ${Hashing.MinhashK / 2}], got $k"))
-    require(verifyGroups.isEmpty || materialize.nonEmpty,
-      "verifyGroups needs materialized candidates (set materialize) — " +
-        "slicing a lazy candidate plan would re-run discovery per slice")
     val cut = materialize.getOrElse(identity[DataFrame] _)
-    // one band-index derivation per call (r15 verdict item 4, the x64
-    // index-reuse lesson): the index feeds THREE consumers — discovery,
-    // the bucket-size window, and (via candidates) the verify — and a
-    // lazy chain re-runs shingles+signatures per consumer. Under a
-    // materialize strategy the index cuts ONCE and every consumer reads
-    // the cut; the lazy default keeps the demo-scale no-storage path.
-    val bands = prebuiltIndex match {
-      case Some(b) => if (materialize.nonEmpty) ensureEagerCut(b) else b
-      case None => cut(lshIndex(df, idCol, textCol))
-    }
+    val bands = survivalIndex(df, idCol, textCol, prebuiltIndex, materialize)
     val discovery = discoveryBands.fold(bands)(k => bands.filter(col("band") < k))
     val cand = cut(lshCandidatePairs(discovery, maxBucket = None))
     // the instrument meets the same wall the capped operator did: the
     // UNCAPPED k-band candidate set at corpus scale (~230M pairs at 5M
-    // docs, k=2) exceeds a box's scratch under a monolithic verify, so
+    // docs, k=2) exceeds a box's scratch under an unsliced verify, so
     // the verify stage takes the same slice knob as minhashLshPairs
-    val truePairs = verifyGroups match {
-      case Some(vg) =>
-        cut(verifyCandidatePairsGrouped(ensureEagerCut(cand), df,
-          idCol, textCol, threshold, vg))
-      case None =>
-        val setsBase = materialize match {
-          case None => df // lazy demo path: verify against the whole corpus
-          case Some(_) =>
-            val candIds = cand
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            df.join(candIds, Seq(idCol), "left_semi")
-        }
-        cut(verifyCandidatePairs(cand, setsBase, idCol, textCol, threshold,
-          cut = cut))
-    }
+    val truePairs = cut(verifyPairs(cand, df, idCol, textCol, threshold,
+      materialize, verifyGroups, cutSets = true))
     // bucket sizes over the FULL index (the sizes the capped operator
     // filters on), then restricted to docs that appear in a true pair —
     // the window must see every bucket member, so filter AFTER it.
@@ -978,6 +871,25 @@ object TextDedup {
     val bnPair = bn.join(pairDocs, Seq("doc_id"), "left_semi")
     joinMinBn(truePairs, bnPair)
   }
+
+  /** The survival instruments' band index, derived once per call (r15
+    * verdict item 4, the x64 index-reuse lesson): the index feeds several
+    * consumers — discovery, the bucket sizes, and (via candidates) the
+    * verify — and a lazy chain re-runs shingles+signatures per consumer.
+    * Under a `materialize` strategy the index is cut ONCE (a
+    * checkpoint-backed `prebuiltIndex` passes [[ensureEagerCut]]
+    * untouched) and every consumer reads the cut; the lazy default keeps
+    * the demo-scale no-storage path.
+    */
+  private def survivalIndex(df: DataFrame, idCol: String, textCol: String,
+      prebuiltIndex: Option[DataFrame],
+      materialize: Option[DataFrame => DataFrame]): DataFrame =
+    prebuiltIndex match {
+      case Some(b) => if (materialize.nonEmpty) ensureEagerCut(b) else b
+      case None =>
+        val index = lshIndex(df, idCol, textCol)
+        materialize.fold(index)(_(index))
+    }
 
   /** The shared min_bn tail of [[lshSurvivalStats]] and
     * [[lshSurvivalStatsSampled]]: FULL-corpus bucket sizes for exactly
@@ -1085,43 +997,24 @@ object TextDedup {
       prebuiltIndex: Option[DataFrame] = None,
       materialize: Option[DataFrame => DataFrame] = None,
       verifyGroups: Option[Int] = None): DataFrame = {
-    require(verifyGroups.isEmpty || materialize.nonEmpty,
-      "verifyGroups needs materialized candidates (set materialize) — " +
-        "slicing a lazy candidate plan would re-run discovery per slice")
     val cut = materialize.getOrElse(identity[DataFrame] _)
-    val bandsFull = prebuiltIndex match {
-      case Some(b) => if (materialize.nonEmpty) ensureEagerCut(b) else b
-      case None => cut(lshIndex(df, idCol, textCol))
-    }
+    val bandsFull = survivalIndex(df, idCol, textCol, prebuiltIndex, materialize)
     // the sample is a pure doc_id predicate — a filter on the full
     // index, never a join (the index is the big thing here)
     val bandsSample = bandsFull.filter(samplePredicate(col("doc_id"), sampleOneIn))
     val sampled = df.filter(samplePredicate(col(idCol), sampleOneIn))
     val cand = cut(lshCandidatePairs(bandsSample, maxBucket = None))
-    val truePairs = verifyGroups match {
-      case Some(vg) =>
-        cut(verifyCandidatePairsGrouped(ensureEagerCut(cand), sampled,
-          idCol, textCol, threshold, vg))
-      case None =>
-        val setsBase = materialize match {
-          case None => sampled // lazy demo path
-          case Some(_) =>
-            val candIds = cand
-              .select(explode(array(col("__graft_id_a"), col("__graft_id_b"))).as(idCol))
-              .distinct()
-            sampled.join(candIds, Seq(idCol), "left_semi")
-        }
-        // deliberately NO sets-cut here, unlike [[lshSurvivalStats]]:
-        // this instrument's verify base is the 1/S sampled sub-corpus
-        // semi-joined to its candidates, so the duplicated lazy shingle
-        // build is S²× smaller than the exact instrument's — the r18
-        // interleaved A/B measured the extra checkpoint barrier COSTING
-        // more than it saves (x65b 3.25→3.88 s, x65 4.22→4.49 s medians
-        // of 3 interleaved runs) where the exact family won (x62
-        // 4.35→3.80 s). The at-scale faces (10M docs) pass verifyGroups
-        // and take the grouped path above, which never hits this branch.
-        cut(verifyCandidatePairs(cand, setsBase, idCol, textCol, threshold))
-    }
+    // deliberately NO sets-cut here (cutSets = false), unlike
+    // [[lshSurvivalStats]]: this instrument's verify base is the 1/S
+    // sampled sub-corpus semi-joined to its candidates, so the duplicated
+    // lazy shingle build is S²× smaller than the exact instrument's — the
+    // r18 interleaved A/B measured the extra checkpoint barrier COSTING
+    // more than it saves (x65b 3.25→3.88 s, x65 4.22→4.49 s medians of 3
+    // interleaved runs) where the exact family won (x62 4.35→3.80 s).
+    // The at-scale faces (10M docs) pass verifyGroups, whose sliced
+    // verify never cuts sets either way.
+    val truePairs = cut(verifyPairs(cand, sampled, idCol, textCol, threshold,
+      materialize, verifyGroups, cutSets = false))
     // FULL-corpus bucket sizes for exactly the buckets the pair docs
     // are members of — the shared histogram tail ([[attachMinBn]]; ONE
     // definition with [[lshSurvivalStats]] so the two instruments can
@@ -1254,8 +1147,8 @@ object TextDedup {
     *
     * Score parity: matches/128 is exact binary arithmetic (k ≤ 128,
     * division by a power of two) — bit-identical in the oracle's replay.
-    */
-  /** `materializeSignatures` carries x2b's verification-strategy
+    *
+    * `materializeSignatures` carries x2b's verification-strategy
     * contract shape: `None` (default) keeps the signature frame lazy —
     * the plan computes the signature aggregate once for the banding and
     * once per pair side (three corpus scans; right at demo scale, where
@@ -1296,18 +1189,6 @@ object TextDedup {
       .filter(col("est_jaccard") >= threshold)
   }
 
-  /** Exact n-gram Jaccard pairs (X2c) via an inverted-index self-join:
-    * co-occurring docs meet on their shared shingle, shared-shingle
-    * counts fall out of a pair aggregate. Equals the all-pairs scan for
-    * every pair sharing ≥1 shingle while touching only co-occurring
-    * docs. `maxDocFreq` drops stop-shingles (document frequency above
-    * the cap) — the frequency cut that bounds the worst bucket at
-    * open-web scale. With a cap, BOTH the shared
-    * counts AND the per-doc set sizes are computed over the capped
-    * shingle universe, so the reported value is the exact Jaccard of the
-    * capped sets (pairs whose similarity rode on stop-shingles drop out —
-    * the intended recall tradeoff — but surviving scores are consistent).
-    */
   /** Postings annotated with per-shingle document frequency `df`, with
     * stop-shingles (df > `maxDocFreq`) removed BEFORE the (sh) exchange
     * when a cap is set — the shared frequency machinery of
@@ -1367,6 +1248,18 @@ object TextDedup {
       .filter(maxDocFreq.fold(lit(true))(cap => col("df") <= cap))
   }
 
+  /** Exact n-gram Jaccard pairs (X2c) via an inverted-index self-join:
+    * co-occurring docs meet on their shared shingle, shared-shingle
+    * counts fall out of a pair aggregate. Equals the all-pairs scan for
+    * every pair sharing ≥1 shingle while touching only co-occurring
+    * docs. `maxDocFreq` drops stop-shingles (document frequency above
+    * the cap) — the frequency cut that bounds the worst bucket at
+    * open-web scale. With a cap, BOTH the shared
+    * counts AND the per-doc set sizes are computed over the capped
+    * shingle universe, so the reported value is the exact Jaccard of the
+    * capped sets (pairs whose similarity rode on stop-shingles drop out —
+    * the intended recall tradeoff — but surviving scores are consistent).
+    */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDocFreq: Option[Int] = None): DataFrame = {
     val td = tokArrays(df, idCol, textCol)
@@ -1571,8 +1464,8 @@ object TextDedup {
     * bounded by the number of strings sharing a deletion variant (corpus-
     * dependent, typically small), never n². The all-pairs alternative
     * this avoids is O(n²) levenshtein calls — at 100 TB, unrunnable.
-    */
-  /** Output columns are the CANONICAL `(left_id, left_str, right_id,
+    *
+    * Output columns are the CANONICAL `(left_id, left_str, right_id,
     * right_str, dist)` — input column names may coincide across the two
     * sides (the self-dedup call passes the same frame twice), so the
     * operator renames internally and never leaks an ambiguous reference.

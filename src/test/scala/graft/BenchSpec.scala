@@ -54,6 +54,22 @@ class BenchSpec extends SparkSpec {
     assert(ok.times.size === 2 && ok.err.isEmpty)
   }
 
+  test("contract line stays valid JSON under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    val line = try {
+      java.util.Locale.setDefault(java.util.Locale.GERMANY)
+      Bench.contractLine(total = 174.9, calib = 2.5, calibIo = 1.25,
+        calibs = Seq(2.5, 2.4375), sweeps = 2, source = "driver", nFailed = 0,
+        io = Seq("x12_scd2_snapshot"), top = Seq("x2b" -> 4.8765, "x64" -> 3.25),
+        omitted = 162, sfDir = "/data/sf0.1")
+    } finally java.util.Locale.setDefault(saved)
+    val rec = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(rec.get("queries").get("x2b").asDouble() === 4.877)
+    assert(rec.get("calibs").get(1).asDouble() === 2.4375)
+    assert(rec.get("n").asInt() === 164)
+    assert(rec.get("value_calib").asDouble() === 174.9 / 2.5)
+  }
+
   test("jsonEscape keeps failure messages one-line-JSON safe") {
     assert(Bench.jsonEscape("""say "hi"\ now""") === """say \"hi\"\\ now""")
     assert(Bench.jsonEscape("a\nb\tc\rd") === "a\\nb\\tc\\rd")

@@ -112,6 +112,13 @@ class IncrementalSpec extends SparkSpec {
     assert(all(r3) === Set(("d1", "a", 1L), ("d2", "b", 20L)))
   }
 
+  test("insert_overwrite refuses an empty partition list") {
+    val e = intercept[IllegalArgumentException] {
+      Incremental.InsertOverwrite(Nil)
+    }
+    assert(e.getMessage.contains("partition column"))
+  }
+
   test("maxWatermark returns the loaded high-water mark (None on all-null)") {
     val df = Seq(1L, 5L, 3L).toDF("ts")
     assert(Incremental.maxWatermark(df, "ts") === Some(5L))

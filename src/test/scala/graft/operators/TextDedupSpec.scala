@@ -23,32 +23,6 @@ class TextDedupSpec extends SparkSpec {
     assert(lazyPairs.nonEmpty)
   }
 
-  test("minhashLshPairsFromIndex: precomputed-index face ≡ from-text, refuses a non-index frame") {
-    val docs = Tables.table(spark, sfDir, "documents")
-    val fromText = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
-        maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    // the x64 shape: ONE banding derivation, cut, then the capped
-    // candidate+verify tail per caller — must be pair-for-pair the
-    // from-text path (lazy AND materialized-candidates variants)
-    val bands = TextDedup.lshIndex(docs, "doc_id", "text").localCheckpoint(true)
-    val fromIndex = TextDedup.minhashLshPairsFromIndex(bands, docs,
-        "doc_id", "text", 0.5, maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    assert(fromIndex === fromText)
-    val fromIndexMat = TextDedup.minhashLshPairsFromIndex(bands, docs,
-        "doc_id", "text", 0.5,
-        materializeCandidates = Some(_.localCheckpoint(true)),
-        maxBucket = Some(64))
-      .collect().map(_.mkString("|")).toSet
-    assert(fromIndexMat === fromText)
-    assert(fromText.nonEmpty)
-    // a frame that isn't lshIndex-shaped refuses, it doesn't misjoin
-    intercept[IllegalArgumentException] {
-      TextDedup.minhashLshPairsFromIndex(docs, docs, "doc_id", "text", 0.5)
-    }
-  }
-
   test("checkpoint storage knob: DISK_ONLY cuts ≡ default level; bad level fails fast") {
     val docs = Tables.table(spark, sfDir, "documents")
     val default = TextDedup.minhashLshPairs(docs, "doc_id", "text", 0.5,
@@ -973,6 +947,11 @@ class TextDedupSpec extends SparkSpec {
       TextDedup.minhashLshPairsWithMinBucket(bands, docs,
         "doc_id", "text", 0.5, maxBucket = 64, verifyGroups = Some(2))
     }.getMessage.contains("materialize"))
+    // a frame that isn't lshIndex-shaped refuses, it doesn't misjoin
+    assert(intercept[IllegalArgumentException] {
+      TextDedup.minhashLshPairsWithMinBucket(docs, docs,
+        "doc_id", "text", 0.5, maxBucket = 64)
+    }.getMessage.contains("band index"))
   }
 
   test("recallAtCaps: exact-face fractions, cap monotonicity, HT reweighting on a pinned frame") {
@@ -1039,6 +1018,38 @@ class TextDedupSpec extends SparkSpec {
     // must return a priced budget (never throw)
     TextDedup.measuredRecallTable.foreach { case (docs, row) =>
       assert(TextDedup.budgetForRecall(docs, row.map(_._2).max) > 0)
+    }
+  }
+
+  test("recall gate at sf0.1: no true pair lost at the calibrated cap, cap 5 or cap 8") {
+    // The only check that catches a banding or capping change that costs
+    // recall: the x63 oracle row recomputes the same degraded curve in
+    // DuckDB, so its hash still matches. Ground truth is the full
+    // uncapped exact verify (affordable at sf0.1). Pinned caps: the
+    // budget rule's own operating point at budget 32 (weak alone — at
+    // sf0.1 the budget never binds), cap 5 (the smallest cap the rule
+    // calibrates to at sf10-sf100, the pin that moves if banding moves)
+    // and cap 8 (the high-recall preset budgetForRecall(5M, 0.9995)
+    // resolves to).
+    val docs = Tables.table(spark, "/root/testdata/sf0.1", "documents")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    try {
+      val bands = TextDedup.eagerCut(TextDedup.lshIndex(docs, "doc_id", "text"))
+      val calCap = TextDedup.calibrateMaxBucket(bands, docs.count(), 32.0)
+      val stats = TextDedup.lshSurvivalStats(docs, "doc_id", "text", 0.5,
+        materialize = Some(TextDedup.eagerCut), prebuiltIndex = Some(bands))
+      val caps = Seq(calCap, 5, 8).distinct
+      val curve = TextDedup.recallAtCaps(stats, caps).collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(curve.keySet === caps.toSet)
+      caps.foreach { cap =>
+        val (nTrue, nSurviving) = curve(cap)
+        assert(nTrue > 0)
+        assert(nSurviving === nTrue, s"recall at cap $cap is $nSurviving/$nTrue")
+      }
+    } finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before(id)) rdd.unpersist(blocking = false)
     }
   }
 

@@ -7,6 +7,8 @@
 #      end in PROBE_*_DONE (the r10 snapshot raced a chain that pgrep
 #      missed because the check ran between faces).
 #   2. sbt test → regenerate the README test-count line from the log.
+#      The suite includes the LSH recall gate (TextDedupSpec "recall
+#      gate at sf0.1"): recall 1.0 at the calibrated cap, cap 5 and cap 8.
 #   3. Official full bench at sf0.1 (lock acquired by Bench itself) →
 #      BENCH_FULL.json.
 #   4. COMMIT the round's evidence mechanically (BENCH_FULL.json,
@@ -46,41 +48,6 @@ fi
 [ -n "$tests" ] && [ -n "$suites" ] || { echo "REFUSE: could not parse test counts" >&2; exit 1; }
 sed -i -E "s/[0-9]+ tests across [0-9]+ suites/${tests} tests across ${suites} suites/" README.md
 echo "README test count synced: ${tests} tests / ${suites} suites"
-
-# RECALL GATE (r12 verdict item 8): any change to banding/capping that
-# costs recall at the calibrated cap must fail the round MECHANICALLY,
-# not editorially — the x63 oracle row can't catch it (DuckDB recomputes
-# the same degraded curve and the hash still matches). recall_exact at
-# sf0.1 measures against exact ground truth (full uncapped verify — fine
-# at this scale) and the gate pins recall == 1.0 at the budget rule's
-# own operating point.
-sbt -batch "runMain graft.ScaleProbe recall_exact /root/testdata/sf0.1" \
-  2>&1 | tee target/recall_gate.log | grep '^{"op"' | tail -1
-python3 - <<'EOF'
-import json
-rec = None
-for line in open('target/recall_gate.log'):
-    if line.startswith('{"op"'):
-        rec = json.loads(line)
-assert rec, "REFUSE: no probe record in target/recall_gate.log"
-diag = rec["diag"]
-# pin the calibrated cap (the rule's own operating point — at sf0.1
-# the budget never binds, so this alone is weak), cap 5 (the smallest
-# cap the budget rule has calibrated to at the production decades,
-# sf10-sf100 — the pin that actually moves if banding moves), and cap 8
-# (the high-recall preset budgetForRecall(5M, 0.9995) resolves to —
-# r13 verdict item 2 asked the gate to cover the preset too)
-for cap, label in ((diag["calibrated_cap"], "calibrated cap"),
-                   (5, "production cap"),
-                   (8, "high-recall preset cap")):
-    ppm = diag[f"recall_ppm_c{cap}"]
-    assert ppm == 1000000, (
-        f"REFUSE: recall at {label} {cap} is {ppm/1e6:.4f} < 1.0 "
-        "— a banding/capping change cost recall; reopen the "
-        "budget-default conversation with numbers before closing")
-print(f"recall gate OK: calibrated cap {diag['calibrated_cap']} and "
-      f"production cap 5 at recall 1.0, n_true {diag['n_true']}")
-EOF
 
 # provenance stamp (r16 verdict item 1: the builder-close record and a
 # later driver record coexisted with nothing saying which was which) —
